@@ -1,46 +1,57 @@
 """Durable MERGE-into-storage upsert over parquet (SURVEY.md §2.2 K1-K3).
 
 The reference's at-rest semantic is ``INSERT ... ON CONFLICT DO UPDATE``
-into live PostgreSQL tables (/root/reference/src/storage/postgres_writer.py:234-259,
-DDL 32-113). Plain parquet has no MERGE, so the durable form here is the
-lakehouse-standard **partition-pruned read-modify-overwrite** under a
-**manifest commit protocol** (a minimal form of what Delta/Iceberg's
-transaction log provides):
+into live PostgreSQL tables inside one transaction (the reference's
+``src/storage/postgres_writer.py:107-113,234-259``). Plain
+parquet has no MERGE, so the durable form here is the lakehouse-standard
+**partition-pruned read-modify-overwrite** under a **manifest commit
+protocol** (a minimal form of what Delta/Iceberg's transaction log
+provides):
 
 - the table is laid out partitioned by a deterministic key-hash bucket
   (``__bucket = pmod(xxhash64(keys...), n_buckets)``);
 - the set of LIVE data files is named by a versioned JSON manifest
   (``_gmie_manifest-v<N>.json`` in the table root); readers read exactly
   the files the highest committed manifest lists — never the directory
-  listing — so partially-written or abandoned files are invisible;
-- a MERGE reads ONLY the live files of buckets that contain updated keys,
-  applies the relational last-write-wins upsert (operators/upsert.py — the
-  oracle-checked core), stages the replacement buckets under a hidden
-  ``.staging-*`` directory, moves the staged files into the live bucket
-  directories under commit-unique names (rename = metadata op, never
-  overwrites existing data), and finally COMMITS by renaming a complete
-  new manifest into place. The manifest rename is the single atomic
-  commit point: a crash at ANY earlier step leaves the previous manifest
-  (and every file it references) fully intact, so readers still see the
-  pre-merge table. Recovery from a crashed merge is simply re-running it;
-  ``vacuum_table`` reclaims any orphaned staging/data files.
+  listing — so partially-written or abandoned files are invisible.
 
-Concurrent merges use optimistic concurrency control on the manifest
-version: claiming the versioned manifest name is the commit point, using
-whichever primitive is exclusive on the filesystem at hand (HDFS: rename,
-which fails onto an existing path; POSIX file:, where rename silently
-overwrites: ``link(2)``, which fails with EEXIST atomically), and the
-LOSER retries —
-re-reads the winner's manifest, re-stages ONLY the buckets whose file
-sets changed under it (its already-moved files for unconflicted buckets
-stay valid: manifests never referenced them), and commits on top. Both
-batches' rows survive, in any interleaving; last-write-wins ties keep the
-upsert's deterministic survivor. Concurrent writers should run with
-``retain_versions > 1`` so the loser's in-flight read of the pre-commit
-file set cannot race the winner's eager cleanup. (The reference holds a
-single Postgres connection with explicit commit/rollback,
-postgres_writer.py:107-113; this is the MERGE-level OCC a full table
-format adds.)
+Both writers of an existing table, ``merge_into_parquet`` and
+``optimize_table``, go through ONE bucket-rewrite routine
+(``_rewrite_buckets``). For a set of target buckets it reads their live
+files from the base manifest, hands them to the caller's arrange function
+(MERGE: the last-write-wins ``upsert`` with the batch; OPTIMIZE: a
+``cluster_by`` or Z-order sort), stages the result under a hidden
+``.staging-*`` directory, moves the staged files into the live bucket
+directories under commit-unique names (rename = metadata op, never
+overwrites existing data), builds the new manifest — files still live
+keep their stats, only the moved-in files are footer-read — and COMMITS
+by claiming the next manifest version. Claiming that name is the single
+atomic commit point: a crash at ANY earlier step leaves the previous
+manifest (and every file it references) intact, so readers still see the
+previous table. Recovery from a crash is re-running the operation;
+``vacuum_table`` reclaims orphaned staging/data files.
+
+The claim uses whichever primitive is exclusive on the filesystem at hand
+(HDFS: rename, which fails onto an existing path; POSIX file:, where rename
+silently overwrites: ``link(2)``, which fails with EEXIST atomically).
+Losing that race is the optimistic-concurrency signal: the loser re-reads
+the winner's manifest, re-stages ONLY the buckets whose file sets changed
+under it (its already-moved files for the other buckets stay valid: no
+manifest ever referenced them), and commits on top. MERGE retries up to
+``_MAX_COMMIT_ATTEMPTS`` times, so both batches' rows survive in any
+interleaving; OPTIMIZE makes one attempt and raises ``ManifestConflict``.
+Concurrent writers should run with ``retain_versions > 1`` so the loser's
+in-flight read of the pre-commit file set cannot race the winner's eager
+cleanup.
+
+Failure policy, the same for both writers: when the commit raises — a lost
+race past the attempt budget or any IO error — the moved files are deleted
+and the staging directories removed, so a re-run does not pile up
+unreferenced files in the live bucket directories. The one exception: a
+commit can raise AFTER it became visible (a tmp-file cleanup error, or an
+interrupt between the exclusive link/rename and the return). If the
+targeted version is live and references the moved files — or that cannot
+be determined — those files ARE the table, and nothing is deleted.
 
 Cost scales with |touched buckets| ≍ |batch|, not |table| — the property
 that makes MERGE viable on a 100 TB table. All manifest/rename operations
@@ -92,6 +103,14 @@ def _hpath(jvm, p: str):
     return jvm.org.apache.hadoop.fs.Path(p)
 
 
+def _manifest_path(path: str, version: int) -> str:
+    return f"{path}/{_MANIFEST_PREFIX}{version:010d}.json"
+
+
+def _all_files(buckets: dict[str, list[str]]) -> list[str]:
+    return [f for files in buckets.values() for f in files]
+
+
 def table_versions(spark: SparkSession, path: str) -> list[int]:
     """Committed manifest versions at ``path``, ascending. More than one
     entry means history is available for ``read_table(version=...)``
@@ -101,9 +120,9 @@ def table_versions(spark: SparkSession, path: str) -> list[int]:
     runs first and a root that provably does not exist short-circuits. A
     listing failure on an EXISTING root (permission flap, transient IO)
     PROPAGATES — swallowing it into ``[]`` would let callers misclassify a
-    live table as absent and bootstrap over it (the round-7 advice defect in
-    ``streaming/scd2_stream.py``: overwrite-bootstrap would have destroyed
-    the maintained history on any transient listing error)."""
+    live table as absent and bootstrap over it (``streaming/scd2_stream.py``
+    would then overwrite-bootstrap, destroying the maintained history on
+    a transient listing error)."""
     jvm, fs = _fs(spark, path)
     if not fs.exists(_hpath(jvm, path)):  # provably absent — the only [] path
         return []
@@ -135,7 +154,7 @@ def _read_manifest(spark: SparkSession, path: str, version: int | None = None):
             f"(committed: {versions or 'none'}) — vacuumed or never written"
         )
     jvm, fs = _fs(spark, path)
-    target = _hpath(jvm, f"{path}/{_MANIFEST_PREFIX}{version:010d}.json")
+    target = _hpath(jvm, _manifest_path(path, version))
     stream = fs.open(target)
     try:
         raw = bytes(stream.readAllBytes())
@@ -172,7 +191,7 @@ def _commit_manifest(
         out.write(bytearray(json.dumps(manifest).encode("utf-8")))
     finally:
         out.close()
-    final = f"{path}/{_MANIFEST_PREFIX}{version:010d}.json"
+    final = _manifest_path(path, version)
     if fs.getUri().getScheme() == "file":
         tmp_local = fs.makeQualified(_hpath(jvm, tmp)).toUri().getPath()
         final_local = fs.makeQualified(_hpath(jvm, final)).toUri().getPath()
@@ -363,9 +382,8 @@ def _move_staged_files(
     jvm, fs, path: str, staging: str, commit_tag: str
 ) -> dict[str, list[str]]:
     """Move staged bucket files into the live tree under commit-unique
-    names (rename = metadata op, never overwrites). The ONE copy of the
-    crash-sensitive move-in protocol, shared by MERGE and OPTIMIZE.
-    Returns bucket value → sorted moved relative paths."""
+    names (rename = metadata op, never overwrites). Returns bucket value →
+    sorted moved relative paths."""
     moved: dict[str, list[str]] = {}
     for st in fs.listStatus(_hpath(jvm, staging)):
         dirname = st.getPath().getName()
@@ -384,6 +402,183 @@ def _move_staged_files(
             rels.append(rel)
         moved[bval] = sorted(rels)
     return moved
+
+
+def _build_manifest(
+    path: str,
+    fields: dict,
+    buckets: dict[str, list[str]],
+    stats_columns: list[str] | None,
+    prior_stats: dict,
+    new_files: list[str],
+    footers: dict | None = None,
+) -> dict:
+    """Manifest for the live file set ``buckets``: the layout ``fields``
+    plus, on a stats-tracked table, per-file min/max of ``stats_columns``.
+    Files still live keep their ``prior_stats``; only ``new_files`` are
+    footer-read (driver-side, bounded by |new files|), through the
+    ``footers`` cache when given, so a retried commit re-reads no footer.
+    Rows written unsorted give wide but CORRECT ranges; ``optimize_table``
+    with ``cluster_by`` restores tight pruning."""
+    manifest = {**fields, "buckets": buckets}
+    if stats_columns:
+        footers = {} if footers is None else footers
+        missing = [f for f in new_files if f not in footers]
+        footers.update(_file_stats(path, missing, list(stats_columns)))
+        live = set(_all_files(buckets))
+        manifest["stats_columns"] = list(stats_columns)
+        manifest["stats"] = {
+            **{r: s for r, s in prior_stats.items() if r in live},
+            **{r: footers[r] for r in new_files if r in footers},
+        }
+    return manifest
+
+
+def _roll_back(
+    spark: SparkSession,
+    jvm,
+    fs,
+    path: str,
+    version: int,
+    moved: dict[str, list[str]],
+    stagings: list[str],
+) -> None:
+    """Failure policy of a commit that raised (module docstring): remove
+    the staging dirs and delete the files the commit moved in, unless
+    manifest ``version`` is live and references them — or that cannot be
+    read, in which case they may be the table and are kept. Never raises:
+    the commit's own error is the one to surface, and ``vacuum_table``
+    stays the backstop when the filesystem is too broken to delete."""
+    ours = set(_all_files(moved))
+    try:
+        committed = False
+        if fs.exists(_hpath(jvm, _manifest_path(path, version))):
+            _, live = _read_manifest(spark, path, version)
+            committed = bool(ours & set(_all_files(live["buckets"])))
+    except Exception:
+        committed = True
+    try:
+        for staging in stagings:
+            fs.delete(_hpath(jvm, staging), True)
+        if not committed:
+            for rel in ours:
+                fs.delete(_hpath(jvm, f"{path}/{rel}"), False)
+    except Exception:
+        pass
+
+
+def _rewrite_buckets(
+    spark: SparkSession,
+    path: str,
+    version: int,
+    manifest: dict,
+    targets: set[str],
+    arrange,
+    fields: dict,
+    tag: str,
+    max_attempts: int,
+    retain_versions: int,
+    stats_columns: list[str] | None = None,
+    max_records_per_file: int | None = None,
+    crash_point: str | None = None,
+    race_hook=None,
+) -> None:
+    """The one commit path of MERGE and OPTIMIZE (module docstring).
+
+    Rewrites the ``targets`` buckets of the table committed as
+    ``version``/``manifest``: ``arrange(live rows of the buckets, bucket
+    set)`` is staged, moved in under a ``tag``-prefixed commit tag, and
+    committed as one new manifest version with layout ``fields``. Zero
+    targets still commits (a stats-only manifest change). A lost race is
+    retried, re-staging only the buckets whose file sets changed, up to
+    ``max_attempts`` commits in total; any other commit failure, or the
+    last lost race, applies the failure policy and re-raises.
+
+    ``stats_columns`` replaces the tracked set; when it differs from the
+    base manifest's, every live file is footer-read. ``crash_point``
+    ("after_stage" | "after_move") and ``race_hook`` (run once between
+    move and commit) are the test hooks of ``merge_into_parquet``.
+    """
+    jvm, fs = _fs(spark, path)
+    schema = StructType.fromJson(fields["schema"]) if fields.get("schema") else None
+    base_version, base_manifest = version, manifest
+    base_files = {b: manifest["buckets"].get(b, []) for b in targets}
+    to_write = set(targets)
+    mine: dict[str, list[str]] = {}
+    stagings: list[str] = []
+    footers: dict[tuple, dict] = {}
+    for attempt in range(1, max_attempts + 1):
+        if to_write:
+            current = _read_live_files(
+                spark, path, base_manifest, schema, to_write
+            )
+            staging = f"{path}/.staging-{uuid.uuid4().hex}"
+            stagings.append(staging)
+            writer = arrange(current, to_write).write.mode("overwrite")
+            if max_records_per_file:
+                writer = writer.option(
+                    "maxRecordsPerFile", int(max_records_per_file)
+                )
+            writer.partitionBy(BUCKET).parquet(staging)
+            if crash_point == "after_stage":
+                raise RuntimeError("injected crash: staged files written, not moved")
+            commit_tag = f"{tag}{base_version + 1:010d}-{uuid.uuid4().hex[:8]}"
+            moved = _move_staged_files(jvm, fs, path, staging, commit_tag)
+            if crash_point == "after_move":
+                raise RuntimeError(
+                    "injected crash: files moved, manifest not committed"
+                )
+            # this attempt supersedes our earlier files for these buckets
+            # (no manifest ever referenced them — safe to drop)
+            for b in to_write:
+                for rel in mine.get(b, []):
+                    fs.delete(_hpath(jvm, f"{path}/{rel}"), False)
+                mine[b] = moved.get(b, [])
+        if race_hook is not None:
+            hook, race_hook = race_hook, None
+            hook()  # test-only: interleave a competing writer deterministically
+        buckets = {**base_manifest["buckets"], **mine}
+        base_stats_cols = base_manifest.get("stats_columns")
+        stats_cols = list(stats_columns or base_stats_cols or [])
+        restat = stats_cols != list(base_stats_cols or [])
+        new_manifest = _build_manifest(
+            path,
+            fields,
+            buckets,
+            stats_cols,
+            {} if restat else base_manifest.get("stats", {}),
+            _all_files(buckets) if restat else _all_files(mine),
+            footers.setdefault(tuple(stats_cols), {}),
+        )
+        try:
+            _commit_manifest(spark, path, base_version + 1, new_manifest)
+            break
+        except BaseException as exc:
+            if not isinstance(exc, ManifestConflict) or attempt == max_attempts:
+                _roll_back(
+                    spark, jvm, fs, path, base_version + 1, mine, stagings
+                )
+                raise
+        # lost the race: a bucket conflicts when the winner changed its
+        # file set since we read it — our staged output lacks their rows
+        base_version, base_manifest = _read_manifest(spark, path)
+        read, base_files = base_files, {
+            b: base_manifest["buckets"].get(b, []) for b in targets
+        }
+        to_write = {b for b in targets if base_files[b] != read[b]}
+    # Post-commit cleanup, best-effort: a crash here leaves garbage that is
+    # invisible to readers (vacuum_table reclaims it). With
+    # retain_versions > 1 the replaced files and prior manifest are KEPT —
+    # they are what read_table(version=...) time travel reads, and what a
+    # competing writer's in-flight read of the pre-commit file set needs.
+    for staging in stagings:
+        fs.delete(_hpath(jvm, staging), True)
+    if retain_versions <= 1:
+        for b in mine:
+            for rel in base_manifest["buckets"].get(b, []):
+                fs.delete(_hpath(jvm, f"{path}/{rel}"), False)
+        if base_version > 0:
+            fs.delete(_hpath(jvm, _manifest_path(path, base_version)), False)
 
 
 def write_bucketed_table(
@@ -444,19 +639,14 @@ def write_bucketed_table(
     # root first; write a NEW root and repoint the caller's reference for
     # that. MERGE, the hot path, is crash-atomic.)
     buckets = _list_bucket_files(df.sparkSession, path)
-    manifest = {
+    fields = {
         "n_buckets": n_buckets,
         "key_columns": list(key_columns),
         "schema": bucketed.schema.jsonValue(),
-        "buckets": buckets,
     }
-    if stats_columns:
-        manifest["stats_columns"] = list(stats_columns)
-        manifest["stats"] = _file_stats(
-            path,
-            [f for files in buckets.values() for f in files],
-            list(stats_columns),
-        )
+    manifest = _build_manifest(
+        path, fields, buckets, stats_columns, {}, _all_files(buckets)
+    )
     _commit_manifest(df.sparkSession, path, 1, manifest)
     return bucketed.schema
 
@@ -474,10 +664,29 @@ def merge_into_parquet(
 ) -> None:
     """MERGE ``updates`` into the bucketed table at ``path`` (last-write-wins).
 
+    Rewrites only the buckets containing updated keys, through the
+    module's bucket-rewrite commit path: untouched buckets' files are never
+    read, moved, or rewritten. Each touched bucket's live rows are upserted
+    with the batch (operators/upsert.py — the oracle-checked core).
+    Idempotent: replaying the same batch leaves the table content unchanged
+    (updates win ties via the upsert's ``__src`` tag, and the survivor set
+    is deterministic).
+
+    Crash-atomic and multi-writer safe as the module docstring describes:
+    the merge becomes visible only at its manifest commit, a lost commit
+    race is retried on top of the winner (up to ``_MAX_COMMIT_ATTEMPTS``
+    commits), and a failed commit removes its moved-in files.
+    ``_crash_point`` is a test-only fault hook ("after_stage" |
+    "after_move") used by the kill-mid-merge tests; ``_race_hook`` is a
+    test-only callable run once between move and commit, used to interleave
+    a competing writer deterministically.
+
     ``retain_versions > 1`` keeps the replaced files and prior manifests on
     disk after the commit, enabling ``read_table(version=...)`` time travel
     over the table's history; ``vacuum_table``'s ``retain_versions`` is the
-    matching retention policy. The default (1) reclaims eagerly.
+    matching retention policy. The default (1) reclaims eagerly. Run
+    concurrent writers with ``retain_versions > 1`` so a winner's eager
+    cleanup cannot delete files a competing merge is still reading.
 
     Additive schema evolution — the reference's ``ALTER TABLE ADD COLUMN
     IF NOT EXISTS`` pattern (postgres_writer.py:94-101) — is native: a
@@ -486,27 +695,6 @@ def merge_into_parquet(
     rows in buckets the merge never rewrites) and commits that schema in
     the manifest, so every later read resolves the column table-wide.
     Asserted in ``test_merge_additive_schema_evolution``.
-
-    Reads only the live files of buckets containing updated keys and
-    replaces only those buckets — untouched buckets' files are never read,
-    moved, or rewritten. Idempotent: replaying the same batch leaves the
-    table content unchanged (updates win ties via the upsert's ``__src``
-    tag, and the survivor set is deterministic).
-
-    Crash-atomic via the module's manifest protocol: new files are staged
-    and moved in under names no reader knows about, and the merge becomes
-    visible only at the final manifest rename. A crash anywhere before that
-    leaves the previous table version fully readable; re-running the merge
-    is the recovery procedure. ``_crash_point`` is a test-only fault hook
-    ("after_stage" | "after_move") used by the kill-mid-merge tests;
-    ``_race_hook`` is a test-only callable run once between move and
-    commit, used to interleave a competing writer deterministically.
-
-    Multi-writer: the commit is optimistic — losing the manifest-version
-    race re-reads the winner's manifest, re-stages only the buckets whose
-    file sets changed, and commits on top (module docstring). Run
-    concurrent writers with ``retain_versions > 1`` so a winner's eager
-    cleanup cannot delete files a competing merge is still reading.
 
     The manifest is the source of truth for the table layout: when one
     exists, its ``n_buckets`` overrides the parameter (a mismatched caller
@@ -531,7 +719,7 @@ def merge_into_parquet(
             n_buckets = int(manifest["n_buckets"])
     up = updates.withColumn(BUCKET, _bucket_col(key_columns, n_buckets))
     # ≤ n_buckets scalar rows — bounded driver collect, independent of data size
-    affected = [r[0] for r in up.select(BUCKET).distinct().collect()]
+    affected = {str(r[0]): r[0] for r in up.select(BUCKET).distinct().collect()}
     if not affected:
         return
     if manifest is None:
@@ -562,150 +750,38 @@ def merge_into_parquet(
                     f"adoption used {manifest.get('key_columns')}, caller "
                     f"passed {list(key_columns)}"
                 )
-    affected_set = {str(b) for b in affected}
-    bucket_vals = {str(b): b for b in affected}
-    jvm, fs = _fs(spark, path)
 
-    def _stage_and_move(base_manifest: dict, buckets: set[str], tag_version: int):
-        """Merge ``buckets``' live files with the matching update rows,
-        stage OUTSIDE the live set, move in under commit-unique names
-        (rename = metadata op; never overwrites). Returns
-        (bucket → moved rel paths, staging dir)."""
-        # Schema pinned from the batch (same columns by contract): parquet
-        # columns resolve by NAME, the partition column fills from dir
-        # names, a still-empty table reads as zero rows instead of failing
-        # inference, and planning skips the footer sweep entirely.
-        current = _read_live_files(
-            spark, path, base_manifest, up.schema, buckets
-        )
+    def arrange(current: DataFrame, buckets: set[str]) -> DataFrame:
         subset = (
             up
-            if buckets == affected_set
-            else up.filter(
-                F.col(BUCKET).isin([bucket_vals[b] for b in buckets])
-            )
+            if len(buckets) == len(affected)
+            else up.filter(F.col(BUCKET).isin([affected[b] for b in buckets]))
         )
         merged = upsert(current, subset, key_columns, order_column=order_column)
-        staging = f"{path}/.staging-{uuid.uuid4().hex}"
-        (
-            merged.repartition(len(buckets), F.col(BUCKET))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET)
-            .parquet(staging)
-        )
-        if _crash_point == "after_stage":
-            raise RuntimeError("injected crash: staged files written, not moved")
-        commit_tag = f"c{tag_version:010d}-{uuid.uuid4().hex[:8]}"
-        moved_files = _move_staged_files(jvm, fs, path, staging, commit_tag)
-        if _crash_point == "after_move":
-            raise RuntimeError(
-                "injected crash: files moved, manifest not committed"
-            )
-        return moved_files, staging
+        return merged.repartition(len(buckets), F.col(BUCKET))
 
-    # Optimistic-concurrency commit loop. Staged-and-moved files are
-    # invisible until a manifest references them, so losing the version
-    # race costs re-staging ONLY the buckets the winner changed — files
-    # for unconflicted buckets are reused as-is in the retried commit.
-    base_version, base_manifest = version, manifest
-    base_files = {b: manifest["buckets"].get(b, []) for b in affected_set}
-    buckets_to_write = set(affected_set)
-    my_files: dict[str, list[str]] = {}
-    stagings: list[str] = []
-    replaced: dict[str, list[str]] = {}
-    committed_version = None
-    _my_stats: dict[str, dict] = {}  # rel → stats, cached across retries
-    _my_stats_cols: list[str] | None = None
-    for _attempt in range(_MAX_COMMIT_ATTEMPTS):
-        if buckets_to_write:
-            moved_files, staging = _stage_and_move(
-                base_manifest, buckets_to_write, base_version + 1
-            )
-            stagings.append(staging)
-            # this attempt supersedes our own earlier files for these
-            # buckets (still unreferenced by any manifest — safe to drop)
-            for b in buckets_to_write:
-                for rel in my_files.get(b, []):
-                    fs.delete(_hpath(jvm, f"{path}/{rel}"), False)
-            my_files.update(moved_files)
-        if _race_hook is not None:
-            hook, _race_hook = _race_hook, None
-            hook()  # test-only: interleave a competing writer deterministically
-        replaced = {b: base_manifest["buckets"].get(b, []) for b in my_files}
-        merged_buckets = {**base_manifest["buckets"], **my_files}
-        new_manifest = {
+    # Schema pinned from the batch (same columns by contract): parquet
+    # columns resolve by NAME, the partition column fills from dir names, a
+    # still-empty table reads as zero rows instead of failing inference,
+    # and planning skips the footer sweep entirely.
+    _rewrite_buckets(
+        spark,
+        path,
+        version,
+        manifest,
+        set(affected),
+        arrange,
+        fields={
             "n_buckets": n_buckets,
             "key_columns": list(key_columns),
             "schema": up.schema.jsonValue(),
-            "buckets": merged_buckets,
-        }
-        # Data-skipping stats maintenance: a stats-tracked table keeps its
-        # per-file min/max across merges — replaced files drop out, moved-in
-        # files are footer-read (bounded by |staged files|, driver-side).
-        # Merge-staged files are unsorted, so their ranges are wide but
-        # CORRECT; periodic optimize_table with cluster_by restores tight
-        # pruning. The footer reads are CACHED across OCC retries: a retry
-        # re-stages only the conflicting buckets, so only its newly moved
-        # files are re-read (round-8 review fix).
-        stats_cols = base_manifest.get("stats_columns")
-        if stats_cols:
-            if _my_stats_cols != list(stats_cols):
-                _my_stats.clear()
-                _my_stats_cols = list(stats_cols)
-            mine = [f for files in my_files.values() for f in files]
-            missing = [f for f in mine if f not in _my_stats]
-            if missing:
-                _my_stats.update(
-                    _file_stats(path, missing, list(stats_cols))
-                )
-            live = {f for files in merged_buckets.values() for f in files}
-            prior = base_manifest.get("stats", {})
-            new_manifest["stats_columns"] = list(stats_cols)
-            new_manifest["stats"] = {
-                **{r: s for r, s in prior.items() if r in live},
-                **{r: _my_stats[r] for r in mine if r in _my_stats},
-            }
-        try:
-            _commit_manifest(spark, path, base_version + 1, new_manifest)
-            committed_version = base_version + 1
-            break
-        except ManifestConflict:
-            base_version, base_manifest = _read_manifest(spark, path)
-            # conflicting bucket = winner changed its file set since our
-            # merge read it; our staged output no longer contains their rows
-            buckets_to_write = {
-                b
-                for b in affected_set
-                if base_manifest["buckets"].get(b, []) != base_files[b]
-            }
-            base_files = {
-                b: base_manifest["buckets"].get(b, []) for b in affected_set
-            }
-    if committed_version is None:
-        raise IOError(
-            f"merge into {path} lost the manifest race "
-            f"{_MAX_COMMIT_ATTEMPTS} times — giving up (orphaned staged "
-            "files are invisible; vacuum_table reclaims them)"
-        )
-    # Post-commit cleanup (best-effort; a crash here leaves garbage that is
-    # invisible to readers — vacuum_table reclaims it). With
-    # retain_versions > 1 the replaced files and prior manifest are KEPT:
-    # they are exactly what read_table(version=...) time travel reads, and
-    # vacuum_table(retain_versions=...) is the retention policy — and the
-    # retention concurrent writers need (an eager delete here can race a
-    # competing merge's in-flight read of the pre-commit file set).
-    for staging in stagings:
-        fs.delete(_hpath(jvm, staging), True)
-    if retain_versions <= 1:
-        for files in replaced.values():
-            for rel in files:
-                fs.delete(_hpath(jvm, f"{path}/{rel}"), False)
-        prev = committed_version - 1
-        if prev > 0:
-            fs.delete(
-                _hpath(jvm, f"{path}/{_MANIFEST_PREFIX}{prev:010d}.json"),
-                False,
-            )
+        },
+        tag="c",
+        max_attempts=_MAX_COMMIT_ATTEMPTS,
+        retain_versions=retain_versions,
+        crash_point=_crash_point,
+        race_hook=_race_hook,
+    )
 
 
 def optimize_table(
@@ -721,20 +797,19 @@ def optimize_table(
     zorder_method: str = "linear",
 ) -> int:
     """Re-layout a manifest table's buckets — the Delta/Iceberg
-    ``OPTIMIZE (ZORDER)`` analog under this module's commit protocol.
-    Returns the number of buckets rewritten.
+    ``OPTIMIZE (ZORDER)`` analog, committed through the module's
+    bucket-rewrite path (crash-atomic like MERGE: readers see the old or
+    the new layout, never a mixture). Returns the number of buckets
+    rewritten.
 
     Why: MERGE rewrites touched buckets as UNSORTED single files, so a
     stats-tracked table's per-file min/max ranges widen with every merge
-    and ``read_table(prune=)`` skipping decays (the trade documented in
-    ``merge_into_parquet``); conversely a bucket that grew large sits in
-    one oversized file. OPTIMIZE rewrites bucket contents sorted by
-    ``cluster_by`` and split by ``max_records_per_file`` (near-disjoint
-    ranges per file — tight pruning again), stages outside the live set,
-    moves in under commit-unique names, and commits ONE new manifest
-    version — crash-atomic like MERGE: readers see the old or the new
-    layout, never a mixture. Without ``cluster_by``/``zorder_by`` it is a
-    pure compactor for buckets holding ≥ ``min_files_per_bucket`` files.
+    and ``read_table(prune=)`` skipping decays; conversely a bucket that
+    grew large sits in one oversized file. OPTIMIZE rewrites bucket
+    contents sorted by ``cluster_by`` and split by ``max_records_per_file``
+    (near-disjoint ranges per file — tight pruning again). Without
+    ``cluster_by``/``zorder_by`` it is a pure compactor for buckets holding
+    ≥ ``min_files_per_bucket`` files.
 
     ``zorder_by`` is the MULTI-dimensional form — ``OPTIMIZE ZORDER BY``
     proper: each bucket's rows are sorted on the Morton interleave of the
@@ -752,12 +827,15 @@ def optimize_table(
 
     ``stats_columns`` RETROFITS data skipping onto a table written without
     it (or changes the tracked set): the new manifest records stats for
-    every live file, rewritten or not.
+    every live file, rewritten or not — a rewrite of zero buckets when no
+    bucket needs one.
 
     Content is row-for-row identical by construction (no upsert logic —
     the rewrite only re-arranges each bucket's rows). Run it as the
-    single writer, or with ``retain_versions > 1`` alongside readers; a
-    concurrent MERGE commit surfaces as ``ManifestConflict`` (re-run).
+    single writer, or with ``retain_versions > 1`` alongside readers: it
+    makes one commit attempt, so a concurrent MERGE commit surfaces as
+    ``ManifestConflict`` (re-run) after the failed attempt's files are
+    removed.
     """
     if cluster_by and zorder_by:
         raise ValueError(
@@ -777,134 +855,41 @@ def optimize_table(
         if files
         and (cluster_by or zorder_by or len(files) >= min_files_per_bucket)
     }
-    if not targets:
-        if stats_columns:  # stats retrofit alone still commits
-            live = [f for files in manifest["buckets"].values() for f in files]
-            new_manifest = dict(manifest)
-            new_manifest["stats_columns"] = list(stats_columns)
-            new_manifest["stats"] = _file_stats(path, live, list(stats_columns))
-            _commit_manifest(spark, path, version + 1, new_manifest)
+    if not targets and not stats_columns:
         return 0
-    schema = (
-        StructType.fromJson(manifest["schema"])
-        if manifest.get("schema")
-        else None
-    )
-    current = _read_live_files(spark, path, manifest, schema, targets)
-    arranged = current.repartition(len(targets), F.col(BUCKET))
-    if cluster_by:
-        arranged = arranged.sortWithinPartitions(
-            BUCKET, *[F.col(c) for c in cluster_by]
-        )
-    elif zorder_by:
-        bits = min(zorder_bits, 63 // len(zorder_by))
-        z = _zorder_sort_key(current, zorder_by, bits, zorder_method)
-        if z is None:
+
+    def arrange(current: DataFrame, buckets: set[str]) -> DataFrame:
+        arranged = current.repartition(len(buckets), F.col(BUCKET))
+        if cluster_by:
+            return arranged.sortWithinPartitions(
+                BUCKET, *[F.col(c) for c in cluster_by]
+            )
+        if zorder_by:
+            bits = min(zorder_bits, 63 // len(zorder_by))
+            z = _zorder_sort_key(current, zorder_by, bits, zorder_method)
             # all-null / empty live set: nothing to interleave — plain
             # compaction ordering (grid calibration needs real bounds)
-            arranged = arranged.sortWithinPartitions(BUCKET)
-        else:
-            arranged = arranged.sortWithinPartitions(F.col(BUCKET), z)
-    staging = f"{path}/.staging-{uuid.uuid4().hex}"
-    writer = arranged.write.mode("overwrite")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-    writer.partitionBy(BUCKET).parquet(staging)
+            return arranged.sortWithinPartitions(
+                F.col(BUCKET), *([] if z is None else [z])
+            )
+        return arranged
 
-    jvm, fs = _fs(spark, path)
-    commit_tag = f"o{version + 1:010d}-{uuid.uuid4().hex[:8]}"
-    moved = _move_staged_files(jvm, fs, path, staging, commit_tag)
-    # an empty staged bucket dir (possible when repartition left a bucket
-    # with zero rows — cannot happen for non-empty targets, but be safe)
-    for b in targets - set(moved):
-        moved[b] = []
-
-    merged_buckets = {**manifest["buckets"], **moved}
-    new_manifest = {
-        "n_buckets": manifest.get("n_buckets"),
-        "key_columns": manifest.get("key_columns"),
-        "schema": manifest.get("schema"),
-        "buckets": merged_buckets,
-    }
-    stats_cols = (
-        list(stats_columns)
-        if stats_columns
-        else manifest.get("stats_columns")
+    _rewrite_buckets(
+        spark,
+        path,
+        version,
+        manifest,
+        targets,
+        arrange,
+        fields={k: manifest.get(k) for k in ("n_buckets", "key_columns", "schema")},
+        tag="o",
+        max_attempts=1,
+        retain_versions=retain_versions,
+        stats_columns=stats_columns,
+        max_records_per_file=max_records_per_file,
     )
-    if stats_cols:
-        live = {f for files in merged_buckets.values() for f in files}
-        if stats_columns and stats_columns != manifest.get("stats_columns"):
-            # retrofit / changed tracked set: stat EVERY live file
-            fresh = _file_stats(path, sorted(live), list(stats_cols))
-            prior = {}
-        else:
-            prior = manifest.get("stats", {})
-            fresh = _file_stats(
-                path,
-                [f for files in moved.values() for f in files],
-                list(stats_cols),
-            )
-        new_manifest["stats_columns"] = list(stats_cols)
-        new_manifest["stats"] = {
-            **{r: s for r, s in prior.items() if r in live},
-            **fresh,
-        }
-    try:
-        _commit_manifest(spark, path, version + 1, new_manifest)
-    except BaseException:
-        # the staged files were already moved into live bucket dirs; ANY
-        # failed commit — a lost OCC race or a transient IO error — would
-        # leave them orphaned there: unreferenced by any manifest,
-        # invisible to readers, but accumulating on every re-run until a
-        # vacuum (round-8 fix covered ManifestConflict only; round-9
-        # review widened it to every commit failure). Undo the move
-        # best-effort before surfacing the original error so a re-run
-        # starts clean; if the filesystem is too broken to delete,
-        # vacuum_table remains the backstop.
-        #
-        # CRITICAL guard (round-10 advice): _commit_manifest can raise
-        # AFTER the commit became visible — tmp-file cleanup IO error, or
-        # a KeyboardInterrupt landing between the exclusive link/rename
-        # and the return. Deleting the moved files then would corrupt the
-        # now-live version+1 manifest, the exact opposite of what this
-        # handler protects. Roll back only if version+1 is verifiably
-        # absent OR verifiably someone ELSE's commit (a lost OCC race: the
-        # live manifest does not reference our commit_tag files, so ours
-        # really are orphans). If OUR commit is live — or we cannot tell —
-        # the moved files ARE the data; never delete.
-        try:
-            vpath = f"{path}/{_MANIFEST_PREFIX}{version + 1:010d}.json"
-            if not fs.exists(_hpath(jvm, vpath)):
-                committed = False
-            else:
-                _, live_m = _read_manifest(spark, path, version + 1)
-                live_files = {
-                    f for files in live_m["buckets"].values() for f in files
-                }
-                ours = {f for files in moved.values() for f in files}
-                committed = bool(ours & live_files)
-        except Exception:
-            committed = True  # can't tell — assume live, never delete
-        if not committed:
-            try:
-                for files in moved.values():
-                    for rel in files:
-                        fs.delete(_hpath(jvm, f"{path}/{rel}"), False)
-                fs.delete(_hpath(jvm, staging), True)
-            except Exception:
-                pass  # never mask the commit failure with a cleanup failure
-        raise
-    fs.delete(_hpath(jvm, staging), True)
-    if retain_versions <= 1:
-        for b in targets:
-            for rel in manifest["buckets"].get(b, []):
-                fs.delete(_hpath(jvm, f"{path}/{rel}"), False)
-        if version > 0:
-            fs.delete(
-                _hpath(jvm, f"{path}/{_MANIFEST_PREFIX}{version:010d}.json"),
-                False,
-            )
     return len(targets)
+
 
 
 def vacuum_table(
@@ -928,7 +913,7 @@ def vacuum_table(
     live: set[str] = set()
     for v in retained:
         _, manifest = _read_manifest(spark, path, v)
-        live |= {f for files in manifest["buckets"].values() for f in files}
+        live.update(_all_files(manifest["buckets"]))
     jvm, fs = _fs(spark, path)
     removed = 0
     keep_names = {f"{_MANIFEST_PREFIX}{v:010d}.json" for v in retained}
@@ -1068,7 +1053,7 @@ def zorder_value(columns: list[str], mins: dict, maxs: dict, bits: int = 16):
     long: one bit more lands the top interleaved bit on the sign bit, and
     beyond that JVM ``shiftleft`` wraps its distance mod 64 — either way
     the curve ordering is silently scrambled and file pruning quietly
-    degrades, so that configuration RAISES instead (round-5 advice).
+    degrades, so that configuration RAISES instead.
     Callers wanting more columns lower ``bits`` (e.g. 4 columns → ≤15
     bits); sub-16-bit grids still cluster far better than a plain sort.
     """
@@ -1161,10 +1146,8 @@ def _zorder_sort_key(
     relative_error: float = 0.001,
 ):
     """Grid calibration shared by :func:`write_zordered` and
-    :func:`optimize_table` — ONE definition of the Morton sort key so
-    the two layout paths can never diverge (code-review fix: the
-    empty/all-NULL guard previously lived only in optimize_table's
-    inlined copy, leaving write_zordered to crash on the same input).
+    :func:`optimize_table` — ONE definition of the Morton sort key, so
+    the empty/all-NULL guard below covers both layout paths.
 
     Returns the key Column, or ``None`` when the live rows offer no
     usable bounds (empty input, or an all-NULL zorder column) — callers

@@ -33,7 +33,7 @@ def _tagged_union(target: DataFrame, updates: DataFrame) -> DataFrame:
 
 
 def upsert(
-    target: DataFrame,
+    target: DataFrame | None,
     updates: DataFrame,
     key_columns: list[str],
     order_column: str | None = None,
@@ -44,7 +44,13 @@ def upsert(
     wins ties — exactly PostgreSQL ``ON CONFLICT (key) DO UPDATE`` applied
     batch-after-target (postgres_writer.py:234-259). Re-running the same
     batch is a no-op (idempotent incremental load, README.md:166).
+
+    ``target`` None is the first load: the key-deduped batch becomes the
+    table (without ``order_column`` an arbitrary duplicate survives).
     """
+    if target is None:
+        order = [F.col(order_column).desc()] if order_column else None
+        return dedup_keyed(updates, key_columns, order)
     unioned = _tagged_union(target, updates)
     order = [F.col("__src").desc()]
     if order_column is not None:

@@ -64,9 +64,4 @@ def load_batch(
             )
     if batch_ts_column is not None and batch_ts_column not in batch.columns:
         batch = batch.withColumn(batch_ts_column, F.current_timestamp())
-    if target is None:
-        from .operators.upsert import dedup_keyed
-
-        order = [F.col(batch_ts_column).desc()] if batch_ts_column else None
-        return dedup_keyed(batch, keys, order)
     return upsert(target, batch, keys, order_column=batch_ts_column)

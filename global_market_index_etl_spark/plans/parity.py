@@ -1097,6 +1097,12 @@ def fx_asof_rate_fill(spark, sf):
     )
 
 
+# E1's source tickers: three of them (^HSI, ^AXJO, ^BSESN) lie outside the
+# indices dimension, so the plan exercises NULL enrichment and NULL-rate
+# propagation; its digest and e1_raw_bars.parquet are pinned to this list.
+E1_TICKERS = "^GSPC,^IXIC,^DJI,^FTSE,^GDAXI,^FCHI,^N225,^HSI,^AXJO,^BSESN"
+
+
 @query(
     "e1_pipeline_market_bars",
     None,  # consumes the Python DataSource — not reachable from DuckDB
@@ -1122,7 +1128,7 @@ def e1_pipeline_market_bars(spark, sf):
     from ..sources.fixtures import fx_rates_df, indices_df
     from ..sources.market_source import read_market_bars
 
-    bars = read_market_bars(spark, bars=48, seed=42)
+    bars = read_market_bars(spark, tickers=E1_TICKERS, bars=48, seed=42)
     raw_long = bars.select(
         F.col("timestamp_utc").alias("timestamp"),
         "ticker",

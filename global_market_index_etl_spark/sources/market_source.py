@@ -23,12 +23,15 @@ from datetime import datetime, timedelta, timezone
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from ..schemas import INDICES_SEED
+
 BAR_SCHEMA = (
     "ticker string, timestamp_utc timestamp, open double, high double, "
     "low double, close double, adjusted_close double, volume bigint"
 )
 
-DEFAULT_TICKERS = "^GSPC,^IXIC,^DJI,^FTSE,^GDAXI,^FCHI,^N225,^HSI,^AXJO,^BSESN"
+# the indices dimension's tickers, so a default batch passes the FK check
+DEFAULT_TICKERS = ",".join(t for t, *_ in INDICES_SEED)
 
 
 class TickerPartition(InputPartition):
@@ -53,6 +56,12 @@ class MarketBarsReader(DataSourceReader):
         # failure isolation knobs (see read()); fail_* inject deterministic
         # errors so the retry/quarantine paths are testable without network
         self.max_attempts = int(options.get("max_attempts", "3"))
+        if self.max_attempts < 1:
+            # zero attempts would fetch nothing: quarantine_report would
+            # call a failing ticker healthy while the bars read raises
+            raise ValueError(
+                f"max_attempts must be >= 1, got {self.max_attempts}"
+            )
         self.on_error = options.get("on_error", "raise")
         self.fail_tickers = {
             x.strip()
@@ -293,15 +302,11 @@ def ticker_metadata_probe(spark, **options):
     ``fail_kind`` (deterministic failure injection), ``divergent``
     (tickers whose live metadata drifts from config — test dial).
     """
-    from ..schemas import INDICES_SEED
-
     # (ticker, name, country, exchange, currency) → name/currency/exchange
     config = {t: (n, c, x) for t, n, _, x, c in INDICES_SEED}
     tickers = [
         t.strip()
-        for t in options.get(
-            "tickers", ",".join(t for t, *_ in INDICES_SEED)
-        ).split(",")
+        for t in options.get("tickers", DEFAULT_TICKERS).split(",")
         if t.strip()
     ]
     seed = int(options.get("seed", "42"))

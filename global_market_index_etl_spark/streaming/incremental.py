@@ -96,15 +96,7 @@ def available_now_upsert(
     def handle_batch(batch: DataFrame, batch_id: int) -> None:
         if transform is not None:
             batch = transform(batch)
-        current = target_read()
-        if current is None:
-            from ..operators.upsert import dedup_keyed
-
-            order = [F.col(order_column).desc()] if order_column else None
-            merged = dedup_keyed(batch, key_columns, order)
-        else:
-            merged = upsert(current, batch, key_columns, order_column)
-        target_write(merged)
+        target_write(upsert(target_read(), batch, key_columns, order_column))
 
     stream = (
         spark.readStream.schema(schema)

@@ -28,6 +28,7 @@ import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from global_market_index_etl_spark.plans.parity import E1_TICKERS  # noqa: E402
 from global_market_index_etl_spark.sources.market_source import (  # noqa: E402
     MarketBarsReader,
 )
@@ -41,7 +42,7 @@ OUT = os.path.join(
 
 
 def main() -> None:
-    reader = MarketBarsReader({"bars": "48", "seed": "42"})
+    reader = MarketBarsReader({"tickers": E1_TICKERS, "bars": "48", "seed": "42"})
     rows = []
     for part in reader.partitions():
         rows.extend(reader.read(part))

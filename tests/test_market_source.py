@@ -263,13 +263,47 @@ def test_metadata_probe_unknown_ticker_has_null_config(spark):
 
 
 def test_metadata_probe_rejects_non_positive_max_attempts(spark):
-    """Code-review fix: max_attempts=0 would emit all-NULL rows with
-    error=NULL — indistinguishable from a healthy probe."""
+    """max_attempts=0 would run zero fetches: the probe would emit all-NULL
+    rows with error=NULL and quarantine_report would call a failing ticker
+    healthy — both indistinguishable from a healthy source."""
     import pytest as _pytest
 
     from global_market_index_etl_spark.sources.market_source import (
         ticker_metadata_probe,
     )
 
-    with _pytest.raises(ValueError, match="max_attempts"):
-        ticker_metadata_probe(spark, max_attempts=0)
+    for probe in (ticker_metadata_probe, quarantine_report):
+        with _pytest.raises(ValueError, match="max_attempts"):
+            probe(spark, max_attempts=0, fail_tickers="^GSPC", fail_attempts=99)
+
+
+def test_default_read_passes_fk_check(spark):
+    """The default ticker list is the indices dimension's, so a default
+    batch standardizes with no FK orphans."""
+    import datetime as dt
+
+    from global_market_index_etl_spark.operators.upsert import fk_violations
+    from global_market_index_etl_spark.pipeline import run_batch
+    from global_market_index_etl_spark.sources.fixtures import (
+        fx_rates_df,
+        indices_df,
+    )
+
+    raw_long = read_market_bars(spark, bars=4).select(
+        F.col("timestamp_utc").alias("timestamp"),
+        "ticker",
+        F.col("open").alias("Open"),
+        F.col("high").alias("High"),
+        F.col("low").alias("Low"),
+        F.col("close").alias("Close"),
+        F.col("adjusted_close").alias("Adj Close"),
+        F.col("volume").cast("double").alias("Volume"),
+    )
+    indices = indices_df(spark)
+    batch = run_batch(
+        raw_long, indices, fx_rates_df(spark, dates=[dt.date(2024, 1, 1)])
+    )
+    assert fk_violations(batch, indices, "ticker").count() == 0
+    assert batch.select("ticker").distinct().count() == len(
+        DEFAULT_TICKERS.split(",")
+    )

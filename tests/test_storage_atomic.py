@@ -387,20 +387,46 @@ def test_optimize_conflict_removes_moved_files(spark, tmp_path, monkeypatch):
     assert _snapshot(spark, path) == before
 
 
-def test_optimize_io_failure_removes_moved_files(spark, tmp_path, monkeypatch):
+def _merged(target):
+    """Table content after MERGE of ``_orders_fixture``'s updates."""
+    return {
+        r.o_orderkey: (
+            float(round(r.o_totalprice))
+            if r.o_orderkey % 100 == 0
+            else r.o_totalprice,
+            r.o_orderstatus,
+        )
+        for r in target.collect()
+    }
+
+
+def _rewrite(spark, path, op, updates):
+    """One bucket-rewrite commit: a MERGE of ``updates``, or an OPTIMIZE
+    compaction of every bucket."""
+    from global_market_index_etl_spark.operators.storage import optimize_table
+
+    if op == "merge":
+        merge_into_parquet(spark, path, updates, ["o_orderkey"])
+    else:
+        assert optimize_table(spark, path, min_files_per_bucket=1) > 0
+
+
+@pytest.mark.parametrize("op", ["merge", "optimize"])
+def test_optimize_io_failure_removes_moved_files(
+    spark, tmp_path, monkeypatch, op
+):
     """ANY failed commit — not only a lost OCC race — rolls the moved
-    files back out of the live bucket dirs (round-9 review fix: the
-    round-8 handler caught ManifestConflict only, so a transient IO
-    error stranded commit-tagged orphans that accumulated on every
-    re-run)."""
+    files back out of the live bucket dirs, for MERGE and OPTIMIZE alike:
+    a handler catching ManifestConflict only would let a transient IO
+    error strand commit-tagged orphans that accumulate on every re-run."""
     import os
 
     import global_market_index_etl_spark.operators.storage as S
 
     path = str(tmp_path / "tbl")
-    target, _ = _orders_fixture(spark)
+    target, updates = _orders_fixture(spark)
     write_bucketed_table(target, path, ["o_orderkey"], n_buckets=4)
-    before = _snapshot(spark, path)
+    expected = _merged(target) if op == "merge" else _snapshot(spark, path)
 
     def on_disk():
         return {
@@ -421,33 +447,34 @@ def test_optimize_io_failure_removes_moved_files(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(S, "_commit_manifest", flaky_commit)
     with pytest.raises(IOError, match="hiccup"):
-        S.optimize_table(spark, path, min_files_per_bucket=1)
+        _rewrite(spark, path, op, updates)
 
-    # the failed optimize cleaned up: no staging dirs, no orphans
-    assert not glob.glob(f"{path}/.staging-*")
+    # the failed commit cleaned up: no orphans, no staging dirs
     assert on_disk() == live_before
+    assert not glob.glob(f"{path}/.staging-*")
 
     # the transient error cleared — plain re-run converges
-    assert S.optimize_table(spark, path, min_files_per_bucket=1) > 0
-    assert _snapshot(spark, path) == before
+    _rewrite(spark, path, op, updates)
+    assert _snapshot(spark, path) == expected
 
 
+@pytest.mark.parametrize("op", ["merge", "optimize"])
 def test_optimize_post_commit_failure_never_deletes_live_files(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, op
 ):
     """_commit_manifest can raise AFTER the commit became visible (tmp
     cleanup IO error, or an interrupt between the exclusive link and the
-    return). The rollback handler must detect that version+1 is live and
+    return). The rollback must detect that version+1 is live and
     references the moved files, and must NOT delete them — doing so would
-    corrupt the committed table (round-10 advice)."""
+    corrupt the committed table."""
     import os
 
     import global_market_index_etl_spark.operators.storage as S
 
     path = str(tmp_path / "tbl")
-    target, _ = _orders_fixture(spark)
+    target, updates = _orders_fixture(spark)
     write_bucketed_table(target, path, ["o_orderkey"], n_buckets=4)
-    before = _snapshot(spark, path)
+    expected = _merged(target) if op == "merge" else _snapshot(spark, path)
     [v1] = S.table_versions(spark, path)
 
     orig_commit = S._commit_manifest
@@ -462,17 +489,17 @@ def test_optimize_post_commit_failure_never_deletes_live_files(
 
     monkeypatch.setattr(S, "_commit_manifest", commit_then_raise)
     with pytest.raises(IOError, match="cleanup failed"):
-        S.optimize_table(spark, path, min_files_per_bucket=1)
+        _rewrite(spark, path, op, updates)
 
     # version+1 is committed and every file it references must exist —
-    # the old (pre-guard) handler deleted them here, corrupting the table
+    # an unguarded rollback deletes them here, corrupting the table
     assert S.table_versions(spark, path) == [v1, tripped[0]]
     _, live_m = S._read_manifest(spark, path)
     for files in live_m["buckets"].values():
         for rel in files:
             assert os.path.exists(f"{path}/{rel}"), f"live file deleted: {rel}"
-    # and the committed table reads back exactly the pre-optimize content
-    assert _snapshot(spark, path) == before
+    # and the committed table reads back exactly the committed content
+    assert _snapshot(spark, path) == expected
 
 
 def test_empty_initial_table_merge_roundtrip(spark, tmp_path):
